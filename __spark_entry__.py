@@ -6,7 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in the ``database_cloner_spark`` package;
-this module only exposes the registry (SURVEY.md §2 inventory).
+this module only exposes the registry (SURVEY.md §2 inventory). Both
+dicts are in registration order (see ``database_cloner_spark.registry``).
 """
 
 from __future__ import annotations

@@ -262,7 +262,9 @@ class ClonePipeline:
                         table, tgt_name, "failed", rows=report["dst_rows"],
                         verified=False, error=f"fingerprint mismatch: {report}",
                     )
-            n = dst.count()
+                n = report["dst_rows"]
+            else:
+                n = dst.count()
             self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
             return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
         except Exception as ex:  # noqa: BLE001 — per-db error isolation (CS:1057-1059)
@@ -299,7 +301,9 @@ class ClonePipeline:
                     table, tgt_name, "failed", rows=report["dst_rows"],
                     verified=False, error=f"fingerprint mismatch: {report}",
                 )
-        n = src.count()
+            n = report["src_rows"]
+        else:
+            n = src.count()
         self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
         return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
 

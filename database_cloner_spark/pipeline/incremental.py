@@ -33,10 +33,14 @@ parallel and column-pruned to the key + hashed columns.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_cloner_spark.pipeline.verify import row_hash_sum
 
 CHUNK_COL = "__chunk"
 
@@ -48,17 +52,43 @@ def with_chunk(df: DataFrame, key_col: str, n_chunks: int) -> DataFrame:
     )
 
 
+def chunked_target_exists(target_path: str) -> bool:
+    """A chunked target exists iff any chunk directory is present. NOT
+    the _SUCCESS marker: dynamic-partition-overwrite commits (every
+    incremental or CDC rewrite) don't produce one."""
+    return bool(glob.glob(os.path.join(target_path, f"{CHUNK_COL}=*")))
+
+
+def replace_chunks(df: DataFrame, target_path: str, chunks: list[int]) -> None:
+    """Make each of `chunks` in the target hold exactly `df`'s rows for
+    that chunk (`df` carries CHUNK_COL and holds no other chunks).
+    Dynamic partition overwrite replaces only the chunks present in
+    `df`; a chunk `df` leaves empty cannot be replaced with nothing, so
+    its directory is removed explicitly (control-plane op, bytes not
+    rows). Untouched chunks' files are never opened."""
+    spark = df.sparkSession
+    present = {r[CHUNK_COL] for r in df.select(CHUNK_COL).distinct().collect()}
+    if present:
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            df.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    for c in chunks:
+        if c not in present:
+            shutil.rmtree(
+                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
+            )
+
+
 def chunk_fingerprints(df: DataFrame, key_col: str, n_chunks: int) -> DataFrame:
-    """(chunk, n_rows, hash_sum) — the verify.py fingerprint per chunk.
-    Columns are hashed in sorted-name order so source and read-back
-    clone fingerprint identically regardless of schema order."""
-    cols = sorted(c for c in df.columns if c != CHUNK_COL)
+    """(chunk, n_rows, hash_sum) — the verify.py fingerprint per chunk,
+    over every column but the chunk id."""
+    cols = [c for c in df.columns if c != CHUNK_COL]
     chunked = with_chunk(df.select(*cols), key_col, n_chunks)
     return chunked.groupBy(CHUNK_COL).agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias(
-            "hash_sum"
-        ),
+        F.count("*").alias("n_rows"), row_hash_sum(cols).alias("hash_sum")
     )
 
 
@@ -90,7 +120,7 @@ def incremental_clone(
     """Sync `target_path` to `src`. First run writes the full table
     partitioned by chunk; later runs rewrite only changed chunks.
     Returns {"mode", "n_chunks", "changed", "rows_rewritten"}."""
-    if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
+    if not chunked_target_exists(target_path):
         out = with_chunk(src, key_col, n_chunks)
         out.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
         return {
@@ -134,26 +164,7 @@ def incremental_clone(
         F.col(CHUNK_COL).isin([int(c) for c in chunks])
     )
     n = delta.count()
-    if n > 0:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # mode=overwrite + dynamic: ONLY the partitions present in
-            # `delta` (== the changed chunks) are replaced.
-            delta.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # Dynamic overwrite only touches partitions PRESENT in the delta: a
-    # chunk whose source rows were all deleted stays stale unless its
-    # directory is removed explicitly (control-plane op, bytes not rows).
-    import shutil
-
-    present = {r[CHUNK_COL] for r in delta.select(CHUNK_COL).distinct().collect()}
-    for c in chunks:
-        if c not in present:
-            shutil.rmtree(
-                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
-            )
+    replace_chunks(delta, target_path, chunks)
     return {
         "mode": "incremental",
         "n_chunks": n_chunks,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,25 +29,27 @@ class TableFingerprint:
     # row-hash sum already covers content exactly.
 
 
-def _hashable_cols(df: DataFrame) -> list:
-    # Sorted by NAME, not schema position: a partitioned write moves the
-    # partition column to the end of the read-back schema, and
-    # xxhash64(a,b,c) != xxhash64(c,a,b) — identical content must
-    # fingerprint identically regardless of column order.
-    # Arrays/maps/structs hash fine with xxhash64; floats are stable
-    # here because a clone is byte-identical, not recomputed.
-    return [F.col(name) for name in sorted(df.columns)]
+def row_hash_sum(columns: list[str]) -> Column:
+    """Aggregate: xxhash64 of each row over `columns`, summed as
+    DECIMAL(38,0) — order-insensitive, overflow-free, duplicate-sensitive
+    (unlike XOR, two identical rows don't cancel).
+
+    Columns are hashed sorted by NAME, not schema position: a partitioned
+    write moves the partition column to the end of the read-back schema,
+    and xxhash64(a,b,c) != xxhash64(c,a,b) — identical content must
+    fingerprint identically regardless of column order.
+    Arrays/maps/structs hash fine with xxhash64; floats are stable
+    here because a clone is byte-identical, not recomputed."""
+    row_hash = F.xxhash64(*[F.col(name) for name in sorted(columns)])
+    return F.sum(row_hash.cast("decimal(38,0)"))
 
 
 def fingerprint(df: DataFrame) -> TableFingerprint:
-    """One-pass content fingerprint. The row hash is xxhash64 over all
-    columns, summed as DECIMAL(38,0): order-insensitive, overflow-free,
-    duplicate-sensitive (unlike XOR, two identical rows don't cancel).
-    Scales as a single partial-aggregated reduction — constant-size state
-    per partition regardless of table size."""
+    """One-pass content fingerprint: row count + row_hash_sum over all
+    columns. Scales as a single partial-aggregated reduction —
+    constant-size state per partition regardless of table size."""
     row = df.agg(
-        F.count("*").alias("__n"),
-        F.sum(F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)")).alias("__h"),
+        F.count("*").alias("__n"), row_hash_sum(df.columns).alias("__h")
     ).collect()[0]
     return TableFingerprint(n_rows=row["__n"], row_hash_sum=str(row["__h"]))
 

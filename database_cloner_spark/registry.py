@@ -6,300 +6,19 @@ Every operator from SURVEY.md §2 is registered exactly once with:
 - its tier ([C]ore / [V]erification-implied / [X] extension).
 
 `__spark_entry__.py` exposes this registry to the driver's correctness
-harness; tests iterate it to run the same comparison locally.
+harness; tests iterate it to run the same comparison locally. Every
+dict returned here is in registration order: module import order in
+`queries/__init__.py`, then decorator order within each module.
 """
 
 from __future__ import annotations
 
-import hashlib
-import inspect
-import json
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
-
-# ---------------------------------------------------------------------------
-# Driver-coverage rotation.
-#
-# The correctness driver verifies only the first ~50 keys of
-# ``__spark_entry__.queries()`` per round (round 1 stopped at exactly 50 in
-# dict-insertion order, leaving joins/windows/streaming/LLM/sampling
-# unchecked — VERDICT.md r1). ``driver_ledger.json`` records every key that
-# has ever received a green driver row (scripts/update_ledger.py merges each
-# round's CORRECTNESS file); the registry surfaces never-verified keys FIRST
-# so successive rounds rotate through the full inventory. Semantics are
-# untouched — only dict ordering changes.
-# ---------------------------------------------------------------------------
-
-_LEDGER_PATH = os.path.join(os.path.dirname(__file__), "driver_ledger.json")
-
-# Hand-prioritized front of the rotation for keys not yet driver-green:
-# previously-FAILED events readers first (prove the nanosAsLong fix), then
-# one full sweep across the never-checked families. Keys absent from this
-# list but not yet green follow in registration order.
-_ROTATION_PRIORITY = [
-    # 11 events-readers that crashed in round 1 (PARQUET_TYPE_ILLEGAL)
-    "q_scan_document",
-    "q_filter_neq",
-    "q_filter_conj",
-    "q_filter_notpid",
-    "q_project",
-    "q_agg_count_filtered",
-    "q_agg_count_by_group",
-    "q_agg_sum_scalar",
-    "q_json_extract",
-    "q_struct_access",
-    "q_pandas_udf_norm",
-    # sampling tier (q_pivot_events also reads events)
-    "q_sample_split",
-    "q_sample_stratified",
-    "q_shuffle_deterministic",
-    "q_pivot_events",
-    "q_agg_cube",
-    "q_corr_subquery",
-    # streaming (batch twins read events)
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_stream_watermark_late",
-    "q_stream_dedup",
-    "q_stream_stateful_totals",
-    "q_stream_interval_join",
-    # joins
-    "q_join_anti",
-    "q_join_semi",
-    "q_join_inner",
-    "q_join_outer_diff",
-    "q_join_broadcast",
-    "q_join_multiway",
-    "q_join_range",
-    "q_join_asof",
-    # windows
-    "q_win_rownum_dedup",
-    "q_win_rank",
-    "q_win_lag_gap",
-    "q_win_running_sum",
-    "q_win_ntile",
-    # analytics extensions + new document source
-    "q_agg_percentile",
-    "q_merge_upsert",
-    "q_text_tfidf",
-    "q_text_pii_scrub",
-    "q_scan_json",
-    # LLM tier core (remaining LLM keys rotate in the next round)
-    "q_dedup_exact",
-    "q_dedup_fuzzy",
-    "q_dedup_minhash",
-    "q_dedup_embedding_bucketed",
-    "q_sim_topk",
-    "q_sim_ivf_topk",
-    "q_text_tokens",
-    "q_text_langid",
-    # Round-2 additions (positions 51+: rotate in as slots free up)
-    "q_win_moving_avg",
-    "q_agg_grouping_sets",
-    "q_dedup_ngram",
-    "q_curate_corpus",
-]
-
-
-def sig_of(
-    builder_src: str, oracle: str | None, helpers: list[str] | None = None
-) -> str:
-    """Content signature over (builder source, oracle SQL, transitive
-    helper sources). The ledger stores the signature captured when a
-    key's driver row was merged; a mismatch against the CURRENT code
-    means the key was edited after its green row and must re-earn
-    driver verification ahead of unchanged keys (VERDICT r10 item 3:
-    green-at-some-round is not green-as-currently-written).
-
-    `helpers` closes the r13 helper-module hole (VERDICT r13 item 3:
-    the llm/dedup.py evaluator rewrite did not bump the
-    q_dedup_embedding* sigs, so the round's second-biggest behavioral
-    rewrite never re-entered the driver window): helper_sources()
-    walks every package-defined function the builder reaches through
-    module globals and feeds their sources into the hash, so a helper
-    rewrite re-queues every key that executes it.
-    scripts/backfill_ledger_sigs.py replicates this definition against
-    historical round-boundary trees; keep the two in sync."""
-    h = hashlib.sha256()
-    h.update(builder_src.encode())
-    h.update(b"\x00")
-    h.update((oracle or "").encode())
-    for src in helpers or ():
-        h.update(b"\x00")
-        h.update(src.encode())
-    return h.hexdigest()[:16]
-
-
-_PKG_PREFIX = __name__.split(".")[0] + "."
-
-
-def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
-    """Walk every package-defined function/class the builder reaches
-    TRANSITIVELY through module globals (plus any UPPER_CASE
-    simple-valued module constant referenced). Returns (sources sorted
-    by (module, qualname) for determinism, defining-file set). Name
-    resolution is static — co_names of the function's code object and
-    every nested code object — so dynamic dispatch through containers
-    is invisible; the full-registry parity run still covers that
-    residual class. scripts/backfill_ledger_sigs.py carries an inline
-    copy of the source walk for historical trees; keep them in sync."""
-    import types
-
-    simple = (int, float, str, bytes, bool, frozenset, tuple)
-    found: dict[tuple[str, str], str] = {}
-    files: set[str] = set()
-    seen: set[int] = {id(builder)}
-    stack = [builder]
-    while stack:
-        fn = stack.pop()
-        code = getattr(fn, "__code__", None)
-        g = getattr(fn, "__globals__", None)
-        if code is None or g is None:
-            continue
-        names: set[str] = set()
-        codes = [code]
-        while codes:
-            c = codes.pop()
-            names.update(c.co_names)
-            for const in c.co_consts:
-                if isinstance(const, types.CodeType):
-                    codes.append(const)
-        # `pkgmod.attr` references: co_names holds both the module name
-        # and the attribute name but not their pairing — resolve every
-        # referenced name against every referenced package module
-        # (conservative over-approximation; extra matches only make the
-        # signature MORE sensitive, never blind).
-        candidates: list = [(nm, g.get(nm)) for nm in names]
-        for _, obj in list(candidates):
-            if isinstance(obj, types.ModuleType) and (
-                obj.__name__.startswith(_PKG_PREFIX)
-                or obj.__name__ == _PKG_PREFIX[:-1]
-            ):
-                candidates.extend(
-                    (nm, getattr(obj, nm, None)) for nm in names
-                )
-        for nm, obj in candidates:
-            if obj is None or id(obj) in seen:
-                continue
-            mod = getattr(obj, "__module__", None) or ""
-            in_pkg = mod.startswith(_PKG_PREFIX) or mod == _PKG_PREFIX[:-1]
-            if isinstance(obj, types.FunctionType) and in_pkg:
-                seen.add(id(obj))
-                try:
-                    src = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    src = obj.__qualname__
-                found[(mod, obj.__qualname__)] = src
-                try:
-                    files.add(os.path.abspath(inspect.getfile(obj)))
-                except (OSError, TypeError):
-                    pass
-                stack.append(obj)
-            elif isinstance(obj, type) and in_pkg:
-                seen.add(id(obj))
-                try:
-                    src = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    src = obj.__qualname__
-                found[(mod, obj.__qualname__)] = src
-                try:
-                    files.add(os.path.abspath(inspect.getfile(obj)))
-                except (OSError, TypeError):
-                    pass
-            elif nm.isupper() and isinstance(obj, simple):
-                owner = getattr(fn, "__module__", "") or ""
-                found[(owner, f"const:{nm}")] = f"{nm}={obj!r}"
-    return [found[k] for k in sorted(found)], files
-
-
-def helper_sources(builder: Callable) -> list[str]:
-    """Deterministic transitive helper sources for sig_of (see
-    _helper_walk)."""
-    return _helper_walk(builder)[0]
-
-
-def helper_files(builder: Callable) -> set[str]:
-    """Absolute defining-file paths of the builder's transitive package
-    helpers (for the ledger merge's dirty-module check)."""
-    return _helper_walk(builder)[1]
-
-
-_SIG_CACHE: dict[str, str] = {}
-
-
-def content_sig(name: str) -> str:
-    """Current-code signature for a registered key (cached per process)."""
-    _ensure_loaded()
-    if name not in _SIG_CACHE:
-        spec = _REGISTRY[name]
-        try:
-            src = inspect.getsource(spec.builder)
-        except (OSError, TypeError):  # builder without retrievable source
-            src = spec.builder.__qualname__
-        _SIG_CACHE[name] = sig_of(src, spec.oracle, helper_sources(spec.builder))
-    return _SIG_CACHE[name]
-
-
-def _driver_green() -> dict[str, dict]:
-    """Ledger entries: key -> {"round": last-verified round, "mode":
-    "hash" | "rows"}. A legacy flat-list ledger loads as round-0 hash
-    entries (maximally stale)."""
-    try:
-        with open(_LEDGER_PATH) as f:
-            raw = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return {}
-    if isinstance(raw, list):
-        return {k: {"round": 0, "mode": "hash"} for k in raw}
-    # migrate entries from any legacy dict shape (values without
-    # round/mode load as maximally-stale hash entries instead of
-    # KeyError-ing every rotation consumer)
-    return {
-        k: (v if isinstance(v, dict) and "round" in v and "mode" in v
-            else {"round": 0, "mode": "hash"})
-        for k, v in raw.items()
-    }
-
-
-def _rotation_order(keys: list[str]) -> list[str]:
-    """Pending keys first, then EDITED green keys, then untouched green
-    keys least-recently-verified first.
-
-    Pending = never driver-green, OR ledgered rows-only but now carrying
-    a DuckDB oracle (an upgraded key must earn a fresh HASH row — the
-    rows-only pass no longer certifies it; VERDICT r8 items 1/3). Within
-    pending: hand-priority list, then registration order.
-
-    Edited = ledger-green but the ledgered content signature no longer
-    matches the current builder+oracle source (or the entry predates
-    signatures): the verified code is not the shipped code, so the key
-    re-enters the driver window ahead of every unchanged key
-    (VERDICT r10 item 3 — rotation staleness). Within each green group:
-    ascending last-verified round, registration order breaking ties, so
-    the driver's ~50-key sample rotates true full coverage over rounds."""
-    green = _driver_green()
-    rank = {k: i for i, k in enumerate(_ROTATION_PRIORITY)}
-
-    def _pending(k: str) -> bool:
-        entry = green.get(k)
-        if entry is None:
-            return True
-        return entry["mode"] == "rows" and _REGISTRY[k].oracle is not None
-
-    pending = [k for k in keys if _pending(k)]
-    pending.sort(key=lambda k: rank.get(k, len(rank)))  # stable: reg order ties
-    done = [k for k in keys if not _pending(k)]
-    edited = [k for k in done if green[k].get("sig") != content_sig(k)]
-    fresh = [k for k in done if green[k].get("sig") == content_sig(k)]
-    edited.sort(key=lambda k: green[k]["round"])  # stable: reg order ties
-    fresh.sort(key=lambda k: green[k]["round"])
-    return pending + edited + fresh
 
 
 @dataclass(frozen=True)
@@ -335,14 +54,12 @@ def _ensure_loaded() -> None:
 
 def all_queries() -> dict[str, Builder]:
     _ensure_loaded()
-    order = _rotation_order(list(_REGISTRY))
-    return {k: _REGISTRY[k].builder for k in order}
+    return {k: s.builder for k, s in _REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
     _ensure_loaded()
-    order = _rotation_order(list(_REGISTRY))
-    return {k: _REGISTRY[k].oracle for k in order if _REGISTRY[k].oracle is not None}
+    return {k: s.oracle for k, s in _REGISTRY.items() if s.oracle is not None}
 
 
 def get_query(name: str) -> QuerySpec:

@@ -27,14 +27,16 @@ Scale mechanics, per micro-batch:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from database_cloner_spark.pipeline.incremental import CHUNK_COL, with_chunk
+from database_cloner_spark.pipeline.incremental import (
+    CHUNK_COL,
+    chunked_target_exists,
+    replace_chunks,
+    with_chunk,
+)
 
 
 def latest_change_per_key(batch: DataFrame, key_col: str) -> DataFrame:
@@ -63,13 +65,7 @@ def apply_cdc_batch(
     n_up = upserts.count()
     n_del = win.count() - n_up
 
-    # Existence = any chunk directory present. NOT the _SUCCESS marker:
-    # dynamic-partition-overwrite commits (this writer's own mode) don't
-    # produce one, so a marker check would misread an initialized target
-    # as empty and silently drop all survivors on the second batch.
-    import glob
-
-    if glob.glob(os.path.join(target_path, f"{CHUNK_COL}=*")):
+    if chunked_target_exists(target_path):
         existing = spark.read.parquet(target_path).filter(
             F.col(CHUNK_COL).isin([int(c) for c in touched])
         )
@@ -84,21 +80,7 @@ def apply_cdc_batch(
     else:
         merged = upserts
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    present = {
-        r[CHUNK_COL] for r in merged.select(CHUNK_COL).distinct().collect()
-    }
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(
-                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
-            )
+    replace_chunks(merged, target_path, touched)
     return {"touched": touched, "upserts": n_up, "deletes": n_del}
 
 

@@ -110,6 +110,30 @@ def test_incremental_clone_chunk_fully_deleted(spark, tmp_path):
     assert final.filter(F.col("r_regionkey") == 3).count() == 0
 
 
+def test_resync_of_cdc_written_target_is_noop(spark, tmp_path):
+    """A target created by CDC apply (dynamic-overwrite commits, no
+    _SUCCESS marker) is an existing chunked target: re-syncing it with
+    identical content rewrites nothing."""
+    from database_cloner_spark.streaming.cdc import apply_cdc_batch
+
+    target = str(tmp_path / "cdc_then_inc")
+    rows = [(k, f"v{k}") for k in range(20)]
+    apply_cdc_batch(
+        spark.createDataFrame(
+            [("upsert", 1, k, v) for k, v in rows],
+            "op string, seq long, k long, val string",
+        ),
+        target, "k", n_chunks=8,
+    )
+    assert not os.path.exists(os.path.join(target, "_SUCCESS"))
+    before = _chunk_mtimes(target)
+
+    src = spark.createDataFrame(rows, "k long, val string")
+    r = incremental_clone(spark, src, target, key_col="k", n_chunks=8)
+    assert r == {"mode": "noop", "n_chunks": 8, "changed": 0, "rows_rewritten": 0}
+    assert _chunk_mtimes(target) == before
+
+
 def test_schema_drift_classification(spark):
     from database_cloner_spark.pipeline.evolve import schema_drift
 

@@ -305,6 +305,40 @@ def test_cdc_batch_apply_merges_and_prunes(spark, tmp_path):
             assert _os.stat(p).st_mtime == old_mtime, f"untouched chunk rewritten: {p}"
 
 
+def test_cdc_delete_emptying_a_chunk_removes_its_directory(spark, tmp_path):
+    """Deleting every key of one chunk leaves no rows to overwrite that
+    chunk with, so its directory must be removed, not left stale."""
+    import os as _os
+
+    from database_cloner_spark.pipeline.incremental import CHUNK_COL, with_chunk
+    from database_cloner_spark.streaming.cdc import apply_cdc_batch
+
+    target = str(tmp_path / "cdc_target")
+    seed = spark.createDataFrame(
+        [("upsert", 1, k, f"v{k}") for k in range(20)],
+        "op string, seq long, k long, val string",
+    )
+    apply_cdc_batch(seed, target, "k", n_chunks=8)
+    chunk_of = {
+        r.k: r[CHUNK_COL]
+        for r in with_chunk(seed, "k", 8).select("k", CHUNK_COL).collect()
+    }
+    victim = chunk_of[0]
+    gone = [k for k, c in chunk_of.items() if c == victim]
+    chunk_dir = _os.path.join(target, f"{CHUNK_COL}={victim}")
+    assert _os.path.isdir(chunk_dir)
+
+    deletes = spark.createDataFrame(
+        [("delete", 2, k, None) for k in gone],
+        "op string, seq long, k long, val string",
+    )
+    r = apply_cdc_batch(deletes, target, "k", n_chunks=8)
+    assert r["touched"] == [victim] and r["deletes"] == len(gone)
+    assert not _os.path.exists(chunk_dir)
+    left = {row.k for row in spark.read.parquet(target).select("k").collect()}
+    assert left == set(range(20)) - set(gone)
+
+
 def test_cdc_stream_applies_microbatches(spark, tmp_path):
     """Two change files arriving as separate micro-batches leave the
     target equal to applying both batches in order."""

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from database_cloner_spark.registry import specs
+from database_cloner_spark.registry import all_oracles, all_queries, specs
 
 _SURVEY = "/root/repo/SURVEY.md"
 _DOCUMENTED_UNREGISTERED = {"q_agg_partial_final"}
@@ -83,3 +83,11 @@ def test_rows_only_set_is_exactly_udf_password():
     item 8)."""
     rows_only = {k for k, v in specs().items() if v.oracle is None}
     assert rows_only == {"q_udf_password"}, rows_only
+
+
+def test_query_and_oracle_dicts_are_in_registration_order():
+    """`__spark_entry__` hands these dicts out as-is, so their order is
+    the registration order and nothing else."""
+    order = list(specs())
+    assert list(all_queries()) == order
+    assert list(all_oracles()) == [k for k in order if specs()[k].oracle is not None]
