@@ -87,11 +87,10 @@ class CloneConfig:
     parallelism: int = 8
     verify_clone: bool = True
     overwrite: bool = False  # False => skip-if-exists (reference semantics)
-    # Admission control (clone_databases.sh:625-708): refuse to mutate a
-    # target table while the active-writers registry holds entries for it.
-    # force=True mirrors the operator choosing to proceed anyway after
-    # reading the kill advice — it does NOT clear the registry.
-    admission_control: bool = True
+    # Admission control (clone_databases.sh:625-708) always refuses to
+    # mutate a target table while the active-writers registry holds
+    # entries for it. force=True mirrors the operator choosing to proceed
+    # anyway after reading the kill advice — it does NOT clear the registry.
     force: bool = False
     host: str = "pg-lb.internal"
     port: int = 5432
@@ -108,6 +107,12 @@ class CloneConfig:
     # Password seed: None (default) => OS CSPRNG, like the reference's
     # /dev/urandom. Set ONLY for reproducible test fixtures.
     seed: int | None = None
+
+
+# At-rest file extension of each file-backed source_format ('jdbc' reads
+# a live server): the work-list scan, the loader and the largest-first
+# size probe all resolve `<source_dir>/<table><ext>` through this map.
+SOURCE_EXT = {"parquet": ".parquet", "orc": ".orc", "mongoexport": ".json"}
 
 
 @dataclass
@@ -150,10 +155,7 @@ def _parse_worklist(
             raise ValueError(
                 "source_format='jdbc' requires an explicit tables work list"
             )
-        ext = {"orc": ".orc", "mongoexport": ".json"}.get(
-            source_format, ".parquet"
-        )
-        return table_names(source_dir, ext=ext)
+        return table_names(source_dir, ext=SOURCE_EXT[source_format])
     if isinstance(tables, str):
         return [t.strip() for t in tables.split(",") if t.strip()]
     return [t.strip() for t in tables]
@@ -173,9 +175,7 @@ class ClonePipeline:
         if self.cfg.source_format == "orc":
             from database_cloner_spark.sources.orc import load_orc
 
-            return load_orc(
-                self.spark, os.path.join(self.cfg.source_dir, f"{table}.orc")
-            )
+            return load_orc(self.spark, self._source_path(table))
         if self.cfg.source_format == "mongoexport":
             from database_cloner_spark.sources.bson import mongoexport_scan
 
@@ -183,10 +183,7 @@ class ClonePipeline:
             # the clone pass, so the landed parquet is typed — the
             # restore half of the reference's mongodump path without a
             # BSON decoder dependency (CS:817-818).
-            return mongoexport_scan(
-                self.spark,
-                os.path.join(self.cfg.source_dir, f"{table}.json"),
-            )
+            return mongoexport_scan(self.spark, self._source_path(table))
         if self.cfg.source_format == "jdbc":
             if self.cfg.jdbc_source is None:
                 raise ValueError(
@@ -197,6 +194,11 @@ class ClonePipeline:
             # unpartitioned-read guard lives in ONE place.
             return jdbc.load_table(self.spark, self.cfg.jdbc_source, table, spec)
         return load(self.spark, self.cfg.source_dir, table)
+
+    def _source_path(self, table: str) -> str:
+        return os.path.join(
+            self.cfg.source_dir, f"{table}{SOURCE_EXT[self.cfg.source_format]}"
+        )
 
     def _target_path(self, table: str) -> str:
         # Rename-in-writer: the prefix is applied to the sink name in the
@@ -222,7 +224,7 @@ class ClonePipeline:
                 return TableResult(table, tgt_name, "skipped")
             # Admission gate (clone_databases.sh:645): refuse while the
             # target table has registered active writers.
-            if self.cfg.admission_control and not self.cfg.force:
+            if not self.cfg.force:
                 writers = admission.active_writers(self.cfg.target_dir, tgt_name)
                 if writers:
                     advice = admission.kill_advice(writers)
@@ -321,10 +323,11 @@ class ClonePipeline:
 
         # Largest-first scheduling: the long pole starts immediately, so
         # wall-clock ~ max(table) instead of sum(tail) (fixes CS:1029).
-        ext = ".orc" if cfg.source_format == "orc" else ".parquet"
-
+        # A live JDBC source has no files to size; its list keeps its order.
         def size_of(t: str) -> int:
-            p = os.path.join(cfg.source_dir, f"{t}{ext}")
+            if cfg.source_format not in SOURCE_EXT:
+                return 0
+            p = self._source_path(t)
             if os.path.isdir(p):
                 return sum(
                     os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
@@ -345,65 +348,27 @@ class ClonePipeline:
                 p = prin.make_principals(r.target_table, cfg.db_prefix, seed=cfg.seed)
                 result.principals.append(p)
 
-        # Metadata tables (queryable ACL model) + per-db password files
-        # + credential summary. Each sink is a tiny independent Spark
-        # job; submitted CONCURRENTLY from the same pool as the table
-        # clones so N dbs cost ~1 job latency, not N (the sequential
-        # loop was ~40% of bench clone wall-clock at sf0.1 — pure
-        # driver-side job-submission latency, invisible at 100 TB but
-        # also pointless there).
+        # Per-db password files, the credential summary and the metadata
+        # tables (queryable ACL model, ownership-transfer record
+        # CS:406-438): driver-side rows, written on the driver.
         if result.principals:
-            def _write_password_file(p: prin.DbPrincipals) -> None:
+            for p in result.principals:
                 reports.write_text_report(
-                    self.spark,
                     reports.password_file_lines(p, cfg.host, cfg.port, now),
                     os.path.join(cfg.target_dir, f"_passwords_{p.target_db}"),
                 )
-
-            def _write_principals() -> None:
-                # repartition(1), not coalesce(1): these frames are driver-
-                # parallelized, and coalescing one makes a single task fetch
-                # every pickled slice (~5s each, measured — reports.py note).
-                prin.principals_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_principals")
+            reports.write_text_report(
+                reports.credential_summary_lines(result.principals, cfg.host, cfg.port, now),
+                os.path.join(cfg.target_dir, "_credential_summary"),
+            )
+            for name, build in (
+                ("_principals", prin.principal_rows),
+                ("_grants", prin.grant_rows),
+                ("_ownership", prin.ownership_rows),
+            ):
+                reports.write_rows(
+                    *build(result.principals), os.path.join(cfg.target_dir, name)
                 )
-
-            def _write_grants() -> None:
-                prin.grants_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_grants")
-                )
-
-            def _write_ownership() -> None:
-                # Ownership-transfer record (clone_databases.sh:406-438).
-                prin.ownership_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_ownership")
-                )
-
-            def _write_summary() -> None:
-                reports.write_text_report(
-                    self.spark,
-                    reports.credential_summary_lines(
-                        result.principals, cfg.host, cfg.port, now
-                    ),
-                    os.path.join(cfg.target_dir, "_credential_summary"),
-                )
-
-            with ThreadPoolExecutor(max_workers=cfg.parallelism) as pool:
-                futures = [pool.submit(_write_password_file, p) for p in result.principals]
-                futures += [
-                    pool.submit(_write_principals),
-                    pool.submit(_write_grants),
-                    pool.submit(_write_ownership),
-                    pool.submit(_write_summary),
-                ]
-                for f in futures:
-                    f.result()  # surface the first failure, if any
 
         # Post-clone principal probes (CS:473 calls test_user_connections
         # right after provisioning). A failed connect-severity probe
@@ -422,10 +387,10 @@ class ClonePipeline:
                 # The probe DAG ran exactly once (report.rows); persist
                 # and log from the collected rows rather than
                 # re-evaluating the joins per consumer.
-                self.spark.createDataFrame(
-                    report.rows, report.frame.schema
-                ).repartition(1).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_principal_probes")
+                reports.write_rows(
+                    report.frame.columns,
+                    report.rows,
+                    os.path.join(cfg.target_dir, "_principal_probes"),
                 )
                 failed_rows = [r for r in report.rows if r.status == "failed"]
                 for row in failed_rows:

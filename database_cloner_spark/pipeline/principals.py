@@ -23,8 +23,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-
 from database_cloner_spark.queries.udfs import _CHARSET
 
 APP_GRANTS = (
@@ -131,45 +129,38 @@ def make_principals(
     )
 
 
-def principals_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+# Each builder returns (columns, rows) for reports.write_rows: all-string
+# tables, a few rows per database.
+
+
+def principal_rows(sets: list[DbPrincipals]) -> tuple[tuple[str, ...], list[tuple]]:
     """`pg_user`-style metadata table: one row per user, role membership
     included (the GRANT role TO user step, clone_databases.sh:408-414)."""
     rows = []
     for p in sets:
         rows.append((p.target_db, p.owner_user, "owner", p.owner_role, p.owner_password))
         rows.append((p.target_db, p.app_user, "app", p.app_role, p.app_password))
-    return spark.createDataFrame(
-        rows, "target_db string, user_name string, user_kind string, granted_role string, password string"
-    )
+    return ("target_db", "user_name", "user_kind", "granted_role", "password"), rows
 
 
-def grants_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+def grant_rows(sets: list[DbPrincipals]) -> tuple[tuple[str, ...], list[tuple]]:
     """`information_schema.role_table_grants`-style table: one row per
     (role, object_kind, privilege) — the matrix of clone_databases.sh:351-404."""
     rows = []
     for p in sets:
-        for kind, priv in APP_GRANTS:
-            rows.append((p.target_db, p.app_role, kind, priv))
-        for kind, priv in APP_DEFAULT_GRANTS:
+        for kind, priv in APP_GRANTS + APP_DEFAULT_GRANTS:
             rows.append((p.target_db, p.app_role, kind, priv))
         for kind, priv in OWNER_GRANTS:
             rows.append((p.target_db, p.owner_role, kind, priv))
-    return spark.createDataFrame(
-        rows, "target_db string, role_name string, object_kind string, privilege string"
-    )
+    return ("target_db", "role_name", "object_kind", "privilege"), rows
 
 
-def ownership_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+def ownership_rows(sets: list[DbPrincipals]) -> tuple[tuple[str, ...], list[tuple]]:
     """Object-ownership metadata — the reference's post-clone ownership
     transfer (clone_databases.sh:406-438: ALTER TABLE/SEQUENCE/VIEW …
     OWNER TO the schema owner, looped over information_schema). In this
     engine each cloned namespace entry is one table object; sequences
-    and views have no parquet analogue, so the frame records the table
-    rows and the loop shape generalizes if such objects appear."""
-    rows = [
-        (p.target_db, "table", p.target_db, p.owner_user) for p in sets
-    ]
-    return spark.createDataFrame(
-        rows,
-        "target_db string, object_kind string, object_name string, owner string",
-    )
+    and views have no parquet analogue, so it records the table rows
+    and the loop shape generalizes if such objects appear."""
+    rows = [(p.target_db, "table", p.target_db, p.owner_user) for p in sets]
+    return ("target_db", "object_kind", "object_name", "owner"), rows

@@ -49,3 +49,10 @@ if grep -qE \
   echo "[precommit_check] query/operator diff detected -> plan + parity gates (sf0.001)"
   python -m pytest tests/test_plans.py tests/test_oracle_parity.py -q
 fi
+# Pipeline edits (clone, re-sync, reports, principals, probes) run the
+# pipeline suites: they drive ClonePipeline end to end and read back
+# every report and metadata table through Spark.
+if grep -qE '^database_cloner_spark/pipeline/' <<<"$CHANGED"; then
+  echo "[precommit_check] pipeline diff detected -> clone/incremental/cli suites"
+  python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_cli.py -q
+fi

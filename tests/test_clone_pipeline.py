@@ -412,3 +412,83 @@ def test_clone_from_mongoexport_source(spark, tmp_path):
     assert dt["total_cents"] == "bigint"     # $numberLong decoded
     assert dt["payload"] == "binary"         # $binary decoded
     assert landed.count() == load(spark, SF, "orders").count()
+
+
+def test_mongoexport_worklist_runs_largest_first(spark, tmp_path):
+    """Largest-first scheduling must size `<table>.json` collections: the
+    alphabetically first collection is the small one, so it runs last."""
+    from database_cloner_spark.sources.bson import orders_mongoexport
+    import shutil
+
+    src = tmp_path / "mongo_sized"
+    src.mkdir()
+    (src / "aaa_tiny.json").write_text('{"_id": {"$oid": "0123456789abcdef01234567"}, "k": 1}\n')
+    shutil.copytree(orders_mongoexport(spark, SF), src / "orders.json")
+    cfg = CloneConfig(
+        source_dir=str(src),
+        target_dir=str(tmp_path / "mongo_sized_clone"),
+        source_format="mongoexport",
+        parallelism=1,
+    )
+    result = ClonePipeline(spark, cfg).run()
+    assert result.ok
+    assert [r.table for r in result.results] == ["orders", "aaa_tiny"]
+
+
+# -- driver-side sinks (pipeline/reports.py) ---------------------------------
+
+
+def test_text_report_reads_back_in_order_and_overwrites(spark, tmp_path):
+    from database_cloner_spark.pipeline.reports import write_text_report
+
+    path = str(tmp_path / "_report")
+    first = ["header", "", "b line", "a line", "ünïcode ✓"]
+    write_text_report(first, path)
+    assert [r.value for r in spark.read.text(path).collect()] == first
+    write_text_report(["replaced"], path)
+    assert [r.value for r in spark.read.text(path).collect()] == ["replaced"]
+
+
+def test_log_sink_and_spark_appends_share_one_table(spark, tmp_path):
+    from database_cloner_spark.pipeline.reports import LogSink
+
+    path = str(tmp_path / "_clone_log")
+    sink = LogSink(spark, path)
+    sink.flush()  # nothing buffered: nothing written
+    assert not os.path.exists(path)
+
+    sink.info("first")
+    sink.error("second")
+    sink.flush()
+    # The streaming log feed (streaming/ops.py stream_to_log) appends
+    # through Spark's writer into the same directory.
+    spark.createDataFrame(
+        [("2024-01-01 00:00:00", "EVENT", "from spark")],
+        "ts string, level string, message string",
+    ).write.mode("append").parquet(path)
+    sink.success("third")
+    sink.flush()
+
+    log = sink.read()
+    assert log.dtypes == [("ts", "string"), ("level", "string"), ("message", "string")]
+    assert sorted((r.level, r.message) for r in log.collect()) == [
+        ("ERROR", "second"),
+        ("EVENT", "from spark"),
+        ("INFO", "first"),
+        ("SUCCESS", "third"),
+    ]
+
+
+def test_driver_side_sinks_submit_no_spark_job(spark, tmp_path):
+    from database_cloner_spark.pipeline.reports import write_rows, write_text_report
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    write_rows(("a", "b"), [("1", "x"), ("2", None)], str(tmp_path / "_rows"))
+    write_rows(("a", "b"), [("3", "y")], str(tmp_path / "_rows"), append=True)
+    write_text_report(["one", "two"], str(tmp_path / "_text"))
+    assert set(tracker.getJobIdsForGroup()) == before
+
+    got = spark.read.parquet(str(tmp_path / "_rows"))
+    assert got.dtypes == [("a", "string"), ("b", "string")]
+    assert sorted(tuple(r) for r in got.collect()) == [("1", "x"), ("2", None), ("3", "y")]
